@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** One operator from SURVEY.md §2: a named Spark query plus (optionally)
   * an equivalent ANSI-SQL oracle the driver runs in DuckDB over the same
@@ -23,6 +24,33 @@ object Op {
 /** Parquet table loaders for the driver-generated TPC-H-ish schema
   * (TESTDATA.md). At 100 TB these would be partitioned/bucketed catalog
   * tables; the access pattern (columnar scan + pushdown) is identical.
+  *
+  * Schema catalog. A schema-less `spark.read.parquet(path)` runs a Spark
+  * job to read parquet footers on every call — a fixed cost per query
+  * that dominates short queries. [[load]] keeps the inferred schema of
+  * each table path in a bounded catalog (256 paths, least recently loaded
+  * evicted first, one entry per path) and passes it back as a user
+  * schema while the table is unchanged. The catalog holds METADATA
+  * only: Spark still lists the files on every load, so an appended part
+  * file is read, and no data is kept — `CacheRegistry` drains data
+  * between queries as before.
+  *
+  * An entry is valid while its fingerprint matches, taken on the driver
+  * before each load: the name, length and modification time of every
+  * file under the path (Hadoop `FileSystem` listing, recursive), plus the
+  * session's parquet schema-conversion confs (`spark.sql.parquet.*`,
+  * `spark.sql.legacy.parquet.*` — e.g. `nanosAsLong` changes how
+  * [[events]]' `ts` converts). A file added, removed or renamed, a length
+  * or mtime change, or a conf change is a miss: the schema is inferred
+  * exactly as a plain `spark.read.parquet(path)` does and replaces the
+  * entry. A path that cannot be listed is read uncached.
+  *
+  * Out of scope: a rewrite that keeps every file's name, length AND
+  * mtime while changing its schema. Writers that replace a table
+  * (Spark, DuckDB, pyarrow) produce new part names or new mtimes; keeping
+  * all three would take a deliberate `touch -r` over a same-size file,
+  * and detecting that would mean reading every footer — the job the
+  * catalog exists to skip.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -30,7 +58,65 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    SchemaCatalog.read(spark, s"$dir/$name.parquet")
+
+  /** The path of every catalog entry (spec hook: one entry per path). */
+  private[graft] def catalogPaths: Seq[String] = SchemaCatalog.paths
+
+  private object SchemaCatalog {
+    private final case class Entry(fingerprint: String, schema: StructType)
+    private val Capacity = 256
+
+    private val entries = new java.util.LinkedHashMap[String, Entry](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, Entry]): Boolean =
+        size > Capacity
+    }
+
+    def paths: Seq[String] = synchronized {
+      import scala.jdk.CollectionConverters._
+      entries.keySet.asScala.toSeq
+    }
+
+    def read(spark: SparkSession, path: String): DataFrame = {
+      // taken BEFORE the read: a write racing the load leaves an entry
+      // whose fingerprint is older than its schema, which the next load
+      // sees as a miss — never a newer fingerprint over an older schema
+      val fp = fingerprint(spark, path)
+      val hit = fp.flatMap(f =>
+        synchronized(Option(entries.get(path))).filter(_.fingerprint == f))
+      hit match {
+        case Some(e) => spark.read.schema(e.schema).parquet(path)
+        case None =>
+          val df = spark.read.parquet(path)
+          fp.foreach(f => synchronized(entries.put(path, Entry(f, df.schema))))
+          df
+      }
+    }
+
+    /** SHA-256 over the sorted file listing and the parquet confs: a
+      * fixed-size entry whatever the table's file count. */
+    private def fingerprint(spark: SparkSession, path: String): Option[String] = {
+      import org.apache.hadoop.fs.{FileStatus, Path}
+      val root = new Path(path)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def walk(s: FileStatus): Seq[FileStatus] =
+        if (s.isDirectory) fs.listStatus(s.getPath).toSeq.flatMap(walk) else Seq(s)
+      val files =
+        try Some(walk(fs.getFileStatus(root)))
+        catch { case _: java.io.IOException => None }
+      files.map { statuses =>
+        val confs = spark.conf.getAll.toSeq
+          .filter { case (k, _) =>
+            k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") }
+          .sorted.map { case (k, v) => s"$k=$v" }
+        val listing = statuses.map(s => s"${s.getPath}\t${s.getLen}\t${s.getModificationTime}").sorted
+        val md = java.security.MessageDigest.getInstance("SHA-256")
+        (listing ++ confs).foreach(l =>
+          md.update((l + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+        java.util.HexFormat.of().formatHex(md.digest())
+      }
+    }
+  }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "orders")

@@ -203,7 +203,16 @@ object GraftApi {
       case Some(n) => if (n <= limit) broadcast(df) else df
       case None =>
         val cached = graft.CacheRegistry.track(df)
-        if (cached.count() <= limit) broadcast(cached) else cached
+        val n = cached.count()
+        // the exact count is paid for anyway, so a distributed frame
+        // whose bound understates it fails fast as a driver-resident one
+        // does above
+        knownRowBound.foreach { b =>
+          require(n <= b, s"adaptiveBroadcast: knownRowBound=$b understates " +
+            s"the frame's measured row count $n — the bound must be a " +
+            "proven upper bound, not an estimate")
+        }
+        if (n <= limit) broadcast(cached) else cached
     }
   }
 

@@ -976,6 +976,12 @@ object Dedup {
     * CONTRACT: frames must be doc_id-DISJOINT (an arriving shard is new
     * documents — the registered split is). Overlapping frames need the
     * general [[incrementalPairs]], whose union count dedups ids.
+    *
+    * Building the serve is NOT lazy: it pins `deltaSk` through
+    * [[graft.CacheRegistry.pin]], whose eager `count()` job computes and
+    * caches the delta sketches when this method is called, before the
+    * returned frame runs. A caller that only composes or inspects the
+    * plan still pays that job; drain the registry to release the cache.
     */
   def incrementalPairsFromIndex(corpusSk: DataFrame, corpusPost: DataFrame,
       corpusHcnt: DataFrame, deltaSk: DataFrame,
@@ -1022,6 +1028,13 @@ object Dedup {
     * warehouse deployment compacts the absorbed shard back into the
     * bucket layout on its maintenance cadence; the serve path is what
     * this measures, per the upsert-accounting precedent.
+    *
+    * Building the serve is NOT lazy: it pins `absorbSk0` and `deltaSk`
+    * through [[graft.CacheRegistry.pin]], whose eager `count()` jobs
+    * compute and cache both shard sketches when this method is called,
+    * before the returned frame runs. A caller that only composes or
+    * inspects the plan still pays those jobs; drain the registry to
+    * release the caches.
     */
   def incrementalPairsUpsertServe(corpusSk: DataFrame,
       corpusPost: DataFrame, corpusHcnt: DataFrame, absorbSk0: DataFrame,
@@ -2977,7 +2990,20 @@ object Dedup {
       .filter(assert_true(col("doc_id") >= 0,
         lit("composedRecallFrom: base doc_id must be >= 0 — negative ids " +
           "collide with the -(doc_id*128 + c) replica id space")).isNull)
-    val replicas = base.filter(ampFilter)
+    val kept = base.filter(ampFilter)
+    // the sketch-side replay below re-applies ampFilter to (doc_id,
+    // sketch) rows, where no other column resolves: refuse such a
+    // filter here, before anything is cached, with the contract named
+    val read = kept.queryExecution.analyzed match {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+        f.condition.references.map(_.name).toSet
+      case _ => Set.empty[String]
+    }
+    require(read.subsetOf(Set("doc_id")),
+      s"composedRecallFrom: ampFilter may reference only doc_id, got " +
+        s"${read.toSeq.sorted.mkString(", ")} — replicas are derived from " +
+        "the (doc_id, sketch) rows of their base docs, which carry no other column")
+    val replicas = kept
       .select(col("doc_id"), col("text"),
         explode(sequence(lit(1), lit(copies))).as("c"))
       .select((-(col("doc_id") * 128 + col("c"))).cast("long").as("doc_id"),

@@ -353,6 +353,21 @@ class DedupSpec extends SparkSpec {
     assert(out("composed") == ((truth, truth, truth)), out)
   }
 
+  test("composed recall: an ampFilter reading any column but doc_id fails fast") {
+    val docs = hotDocs(Seq((0L, base), (1L, base.replace("fast", "quick"))), base, n = 0)
+    // the replica sketches replay ampFilter over (doc_id, sketch) rows:
+    // a text predicate would select different rows there, so it must be
+    // refused before anything is cached, with the packing contract named
+    val live = CacheRegistry.liveCount
+    Seq(length(col("text")) > 10,
+      col("doc_id") === 0L && col("text").contains("fast")).foreach { f =>
+      val e = intercept[IllegalArgumentException](
+        Dedup.composedRecallFrom(docs, ampFilter = f, copies = 3))
+      assert(e.getMessage.contains("ampFilter may reference only doc_id"), e.getMessage)
+    }
+    assert(CacheRegistry.liveCount == live)
+  }
+
   test("recall audit: exact counts on the crafted corpus, per-method invariants") {
     val out = Dedup.recallAuditFrom(spark.read.parquet(s"$docsDir/documents.parquet"))
       .collect().map(r => r.getAs[String]("method") ->

@@ -109,6 +109,24 @@ class PipelineAdaptiveSpec extends SparkSpec {
     assert(!pJ.contains("array_intersect"), pJ)
   }
 
+  test("adaptiveBroadcast: a distributed frame's understated bound fails on the measured path") {
+    import graft.api.GraftApi
+    // spark.range is distributed (no LocalRelation to cross-check for
+    // free), and a bound above maxRows proves nothing, so the frame is
+    // persisted and counted — that count must catch the misuse
+    val df = spark.range(0, 100).toDF("id")
+    assert(GraftApi.localRowCount(df).isEmpty)
+    val e = intercept[IllegalArgumentException](
+      GraftApi.adaptiveBroadcast(df, maxRows = 10L, knownRowBound = Some(50L)))
+    CacheRegistry.drain()
+    assert(e.getMessage.contains("knownRowBound=50") &&
+      e.getMessage.contains("measured row count 100"), e.getMessage)
+    // a true bound takes the same measured path and passes
+    val ok = GraftApi.adaptiveBroadcast(df, maxRows = 10L, knownRowBound = Some(100L))
+    assert(ok.count() == 100L)
+    CacheRegistry.drain()
+  }
+
   test("plan shape: broadcast joins below the threshold, shuffled joins above it") {
     // below threshold (default 4M): every sliver join is a broadcast —
     // the corpus side never shuffles for a join
